@@ -104,11 +104,9 @@ def main(argv: list[str] | None = None) -> int:
             args.out,
             max_months=args.months,
         )
-        print(
-            f"{len(manifest['frames'])} frames "
-            f"({manifest['months'][0]}..{manifest['months'][-1]}) -> "
-            f"{manifest['video']}"
-        )
+        months = manifest["months"]
+        span = f" ({months[0]}..{months[-1]})" if months else ""
+        print(f"{len(manifest['frames'])} frames{span} -> {manifest['video']}")
         return 0
 
     if args.cmd == "list":

@@ -7,12 +7,16 @@ Mirrors the reference's output stages (SURVEY.md §2.1 S6/S9, §2.3 A5):
 in the engine (``operators.histogram``); only the final <=1.4M-cell
 grid is collected here, exactly as the reference collects per-task.
 
-No image libraries are in this container, so the PNG encoder is a
-dependency-free implementation of the spec (zlib + CRC chunks), and
-the video stitch shells out to ffmpeg only if present — otherwise it
-writes the ordered frame manifest and raises ``NotImplementedError``,
-keeping the orchestration (collect frames in iteration order) real and
-tested while stubbing the codec, as the build contract requires.
+One numpy kernel, ``shade_grid``, turns a dense row-major count grid
+into a PNG: eq-hist levels by ``searchsorted`` over the sorted nonzero
+counts, a palette gather, and the encoder.  numpy is the only
+dependency (already loaded at set-up by the pandas UDFs); no image
+libraries are in this container, so the PNG encoder implements the
+spec itself (zlib + CRC chunks), and the video stitch shells out to
+ffmpeg only if present — otherwise it writes the ordered frame
+manifest and raises ``NotImplementedError``, keeping the orchestration
+(collect frames in iteration order) real and tested while stubbing the
+codec, as the build contract requires.
 """
 
 from __future__ import annotations
@@ -24,6 +28,7 @@ import zlib
 from collections.abc import Sequence
 from pathlib import Path
 
+import numpy as np
 from pyspark.sql import DataFrame
 
 # 8-color 'fire'-like ramp (black -> red -> orange -> yellow -> white),
@@ -38,23 +43,28 @@ _FIRE = [
     (255, 220, 60),
     (255, 255, 255),
 ]
+_PALETTE = np.asarray(_FIRE, np.uint8)
 
 
-def eq_hist_shade(counts: Sequence[int], n_levels: int = len(_FIRE)) -> list[int]:
+def eq_hist_shade(
+    counts: Sequence[int] | np.ndarray, n_levels: int = len(_FIRE)
+) -> np.ndarray:
     """Histogram-equalized level per cell (datashader's default
     ``how='eq_hist'``): rank-based mapping so every color level covers
     roughly the same number of *nonzero* cells.  Zero stays level 0.
+
+    A count's rank is the index of its first occurrence in the sorted
+    nonzero counts, so ties share a level.
     """
-    nz = sorted(c for c in counts if c > 0)
-    if not nz:
-        return [0] * len(counts)
-    # value -> quantile rank of its first occurrence (ties share a level)
-    level_of: dict[int, int] = {}
-    for i, v in enumerate(nz):
-        if v not in level_of:
-            q = i / len(nz)
-            level_of[v] = 1 + min(int(q * (n_levels - 1)), n_levels - 2)
-    return [level_of[c] if c > 0 else 0 for c in counts]
+    counts = np.asarray(counts)
+    levels = np.zeros(counts.shape, np.uint8)
+    nonzero = counts > 0
+    nz = np.sort(counts[nonzero])
+    if nz.size:
+        q = np.searchsorted(nz, counts[nonzero], side="left") / nz.size
+        rank = (q * (n_levels - 1)).astype(np.int64)
+        levels[nonzero] = 1 + np.minimum(rank, n_levels - 2)
+    return levels
 
 
 def _png_chunk(tag: bytes, payload: bytes) -> bytes:
@@ -66,17 +76,19 @@ def _png_chunk(tag: bytes, payload: bytes) -> bytes:
     )
 
 
-def write_png(path: str | Path, width: int, height: int, rgb_rows: bytes) -> None:
-    """Minimal RGB8 PNG encoder (no deps): IHDR + IDAT + IEND.
+def write_png(
+    path: str | Path, width: int, height: int, rgb_rows: bytes | np.ndarray
+) -> None:
+    """Minimal RGB8 PNG encoder: IHDR + IDAT + IEND.
 
-    ``rgb_rows`` is height rows of width*3 bytes, top to bottom.
+    ``rgb_rows`` is any buffer of height rows of width*3 bytes, top to
+    bottom; each row gets filter byte 0 (None).
     """
-    if len(rgb_rows) != width * height * 3:
+    rgb = np.frombuffer(rgb_rows, np.uint8)
+    if rgb.size != width * height * 3:
         raise ValueError("rgb_rows size mismatch")
-    raw = b"".join(
-        b"\x00" + rgb_rows[y * width * 3 : (y + 1) * width * 3]
-        for y in range(height)
-    )
+    raw = np.zeros((height, width * 3 + 1), np.uint8)
+    raw[:, 1:] = rgb.reshape(height, width * 3)
     ihdr = struct.pack(">IIBBBBB", width, height, 8, 2, 0, 0, 0)
     png = (
         b"\x89PNG\r\n\x1a\n"
@@ -85,6 +97,17 @@ def write_png(path: str | Path, width: int, height: int, rgb_rows: bytes) -> Non
         + _png_chunk(b"IEND", b"")
     )
     Path(path).write_bytes(png)
+
+
+def shade_grid(
+    flat_counts: np.ndarray, width: int, height: int, path: str | Path
+) -> None:
+    """Shade a dense row-major ``height*width`` count grid and export it
+    as a PNG: eq-hist levels -> fire palette -> encoder.  Black
+    background per ``export_image(.., background='black')`` at
+    ``main.py:80-85``."""
+    rgb = _PALETTE[eq_hist_shade(flat_counts)]
+    write_png(path, width, height, rgb)
 
 
 def render_grid_png(
@@ -98,23 +121,13 @@ def render_grid_png(
 ) -> None:
     """Collect a (sparse) binned grid and export a shaded PNG.
 
-    The ONLY driver materialization in the pipeline, and it is bounded:
-    ``width*height`` cells regardless of input scale (1400x1000 in the
-    reference).  Black background per ``export_image(..,
-    background='black')`` at ``main.py:80-85``.
+    The driver materialization is bounded: ``width*height`` cells
+    regardless of input scale (1400x1000 in the reference).
     """
-    cells = {
-        (r[x_col], r[y_col]): r[count_col]
-        for r in binned.select(x_col, y_col, count_col).collect()
-    }
-    flat = [
-        cells.get((x, y), 0) for y in range(height) for x in range(width)
-    ]
-    levels = eq_hist_shade(flat)
-    rgb = bytearray(width * height * 3)
-    for i, lev in enumerate(levels):
-        rgb[3 * i : 3 * i + 3] = bytes(_FIRE[lev])
-    write_png(path, width, height, bytes(rgb))
+    flat = np.zeros(width * height, np.int64)
+    for x, y, c in binned.select(x_col, y_col, count_col).collect():
+        flat[y * width + x] = c
+    shade_grid(flat, width, height, path)
 
 
 def stitch_video(

@@ -10,10 +10,14 @@ main.py:49-92`); the reduce stitches PNGs into a video in index order
 
 Here the per-month fan-out, the stage barrier, and the S3 exchange all
 collapse into a single grouped aggregation keyed by (month, px, py) —
-one scan, one shuffle bounded by grid_size x n_months, then a
-driver-side render loop over the (tiny) collected grids.  This is the
-cross-month histogram the reference could never compute (its months
-only ever met as video frames, SURVEY.md §4 "partial+final
+one scan, one shuffle bounded by grid_size x n_months, one collect.
+The driver then buckets the collected rows once: a single pass unpacks
+them into month code, flat cell index and count arrays, grouped by
+month.  Each month is densified into one reused ``width*height``
+buffer and handed to ``operators.render.shade_grid``, so driver memory
+stays at the collected rows plus one frame, never months x cells.
+This is the cross-month histogram the reference could never compute
+(its months only ever met as video frames, SURVEY.md §4 "partial+final
 aggregation").
 """
 
@@ -21,10 +25,11 @@ from __future__ import annotations
 
 from pathlib import Path
 
+import numpy as np
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from awsbatch_mapreduce_spark.operators.render import render_grid_png, stitch_video
+from awsbatch_mapreduce_spark.operators.render import shade_grid, stitch_video
 from awsbatch_mapreduce_spark.plans.reference_parity import (
     _BBOX,
     _GRID_H,
@@ -76,15 +81,25 @@ def run_reference_pipeline(
     )
     # one action; per-month grids are grid-bounded, never input-bounded
     rows = binned.collect()
-    months = sorted({r.year_month for r in rows})
-    if max_months is not None:
-        months = months[:max_months]
+    months: list[str] = []
     frame_paths: list[Path] = []
-    for i, mon in enumerate(months):
-        grid = [(r.px, r.py, r["count"]) for r in rows if r.year_month == mon]
-        frame = out / f"output-iteration-{i:03d}.png"
-        _render_rows(grid, frame, width, height)
-        frame_paths.append(frame)
+    if rows:
+        # rows are tuples: positional unpacking skips Row.__getattr__
+        year_month, px, py, count = zip(*rows)
+        month_names, code = np.unique(year_month, return_inverse=True)
+        order = np.argsort(code)
+        cell = (np.asarray(py) * width + np.asarray(px))[order]
+        count = np.asarray(count, np.int64)[order]
+        bounds = np.searchsorted(code[order], np.arange(len(month_names) + 1))
+        months = month_names.tolist()[:max_months]
+        flat = np.zeros(width * height, np.int64)
+        for i in range(len(months)):
+            lo, hi = bounds[i], bounds[i + 1]
+            flat[:] = 0
+            flat[cell[lo:hi]] = count[lo:hi]
+            frame = out / f"output-iteration-{i:03d}.png"
+            shade_grid(flat, width, height, frame)
+            frame_paths.append(frame)
     manifest = {
         "months": months,
         "frames": [str(p) for p in frame_paths],
@@ -96,20 +111,3 @@ def run_reference_pipeline(
     except NotImplementedError:
         manifest["video"] = str((out / "output.mp4").with_suffix(".frames.txt"))
     return manifest
-
-
-def _render_rows(
-    grid: list[tuple[int, int, int]], path: Path, width: int, height: int
-) -> None:
-    """Render a sparse (px, py, count) list without re-entering Spark
-    (``render_grid_png`` collects a DataFrame; here the rows are
-    already collected once for all months)."""
-    from awsbatch_mapreduce_spark.operators.render import _FIRE, eq_hist_shade, write_png
-
-    cells = {(px, py): c for px, py, c in grid}
-    flat = [cells.get((xx, yy), 0) for yy in range(height) for xx in range(width)]
-    levels = eq_hist_shade(flat)
-    rgb = bytearray(width * height * 3)
-    for i, lev in enumerate(levels):
-        rgb[3 * i : 3 * i + 3] = bytes(_FIRE[lev])
-    write_png(path, width, height, bytes(rgb))

@@ -63,6 +63,28 @@ def test_cli_pipeline_end_to_end(spark, capsys, tmp_path):
     assert listing.exists() and "output-iteration-000.png" in listing.read_text()
 
 
+def test_cli_pipeline_zero_months(spark, capsys, tmp_path):
+    """``--months 0``, like an input with no rows in the bbox, renders no
+    frame: the summary names only the frame manifest instead of
+    indexing an empty month list."""
+    out = tmp_path / "pipeline"
+    assert main(
+        ["pipeline", "--sf-dir", SF_DIR, "--out", str(out), "--months", "0"]
+    ) == 0
+    assert capsys.readouterr().out.strip() == f"0 frames -> {out / 'output.frames.txt'}"
+    assert not list(out.glob("*.png"))
+
+
+def test_cli_pipeline_empty_input(spark, capsys, tmp_path):
+    sf = tmp_path / "empty_sf"
+    spark.read.parquet(f"{SF_DIR}/lineitem.parquet").limit(0).write.parquet(
+        str(sf / "lineitem.parquet")
+    )
+    out = tmp_path / "pipeline"
+    assert main(["pipeline", "--sf-dir", str(sf), "--out", str(out)]) == 0
+    assert capsys.readouterr().out.strip() == f"0 frames -> {out / 'output.frames.txt'}"
+
+
 def test_cli_curate_end_to_end(tmp_path, capsys):
     """The composed curation build: monotone funnel counts, hive-layout
     export that prunes on read, and a manifest that reproduces run-over-

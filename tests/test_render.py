@@ -12,11 +12,14 @@ import struct
 import zlib
 from pathlib import Path
 
+import numpy as np
 import pytest
 
 from awsbatch_mapreduce_spark.operators.render import (
+    _FIRE,
     eq_hist_shade,
     render_grid_png,
+    shade_grid,
     stitch_video,
     write_png,
 )
@@ -66,6 +69,67 @@ def test_eq_hist_equal_mass():
     # monotone: higher count -> same or higher level
     nz = [(c, l) for c, l in zip(counts, levels) if c > 0]
     assert all(l2 >= l1 for (_, l1), (_, l2) in zip(nz, nz[1:]))
+
+
+def _reference_rgb(flat: list[int]) -> bytes:
+    """The pure-Python shading the numpy kernel replaced: first-occurrence
+    rank over the sorted nonzero counts, then one palette copy per cell."""
+    nz = sorted(c for c in flat if c > 0)
+    level_of: dict[int, int] = {}
+    for i, v in enumerate(nz):
+        if v not in level_of:
+            q = i / len(nz)
+            level_of[v] = 1 + min(int(q * (len(_FIRE) - 1)), len(_FIRE) - 2)
+    rgb = bytearray(len(flat) * 3)
+    for i, c in enumerate(flat):
+        rgb[3 * i : 3 * i + 3] = bytes(_FIRE[level_of[c] if c > 0 else 0])
+    return bytes(rgb)
+
+
+def _kernel_rgb(tmp_path: Path, flat: list[int], w: int, h: int) -> bytes:
+    p = tmp_path / "k.png"
+    shade_grid(np.asarray(flat, np.int64), w, h, p)
+    dw, dh, raw = _decode_png(p)
+    assert (dw, dh) == (w, h)
+    rows = [raw[y * (w * 3 + 1) : (y + 1) * (w * 3 + 1)] for y in range(h)]
+    assert all(r[0] == 0 for r in rows)
+    return b"".join(r[1:] for r in rows)
+
+
+def _sparse(rng, w: int, h: int, density: float, hi: int) -> list[int]:
+    cells = rng.random(w * h) < density
+    return np.where(cells, rng.integers(1, hi, w * h), 0).tolist()
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["random", "many_ties", "all_zero", "single_cell", "edge_bins", "dense"],
+)
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_shade_grid_matches_reference(tmp_path, case, seed):
+    """The numpy kernel's pixels equal the pure-Python shading's on
+    seeded sparse grids, ties, empty and one-cell grids, and counts
+    in the last column and row (``px=W-1``, ``py=H-1``)."""
+    rng = np.random.default_rng(seed)
+    w, h = 37, 23
+    if case == "random":
+        flat = _sparse(rng, w, h, 0.2, 10_000)
+    elif case == "many_ties":
+        flat = _sparse(rng, w, h, 0.5, 4)
+    elif case == "all_zero":
+        flat = [0] * (w * h)
+    elif case == "single_cell":
+        flat = [0] * (w * h)
+        flat[int(rng.integers(w * h))] = int(rng.integers(1, 100))
+    elif case == "edge_bins":
+        flat = _sparse(rng, w, h, 0.05, 50)
+        for y in range(h):
+            flat[y * w + w - 1] = int(rng.integers(1, 50))
+        for x in range(w):
+            flat[(h - 1) * w + x] = int(rng.integers(1, 50))
+    else:
+        flat = rng.integers(0, 1_000_000, w * h).tolist()
+    assert _kernel_rgb(tmp_path, flat, w, h) == _reference_rgb(flat)
 
 
 def test_render_grid_png_from_query(spark, tmp_path):
